@@ -270,20 +270,33 @@ class SaslFramedFile:
         self._rfile = rfile
         self._buf = b""
 
+    def _fill(self) -> bool:
+        """Append the next frame's payload; False at a clean EOF."""
+        hdr = self._rfile.read(4)
+        if len(hdr) < 4:
+            if self._buf:
+                raise EOFError("short sasl data frame")
+            return False  # clean EOF between frames
+        (ln,) = struct.unpack(">I", hdr)
+        payload = self._rfile.read(ln)
+        if len(payload) < ln:
+            raise EOFError("short sasl data frame")
+        self._buf += payload
+        return True
+
     def read(self, n: int) -> bytes:
         while len(self._buf) < n:
-            hdr = self._rfile.read(4)
-            if len(hdr) < 4:
-                if self._buf:
-                    raise EOFError("short sasl data frame")
-                return b""  # clean EOF between frames
-            (ln,) = struct.unpack(">I", hdr)
-            payload = self._rfile.read(ln)
-            if len(payload) < ln:
-                raise EOFError("short sasl data frame")
-            self._buf += payload
+            if not self._fill():
+                return b""
         out, self._buf = self._buf[:n], self._buf[n:]
         return out
+
+    def peek(self) -> bytes:
+        """The buffered bytes, one frame read if none are (as
+        BufferedReader.peek: the thrift reader cuts strings out of it)."""
+        if not self._buf:
+            self._fill()
+        return self._buf
 
 
 def frame(payload: bytes) -> bytes:

@@ -42,7 +42,7 @@ OPERATION_RESULT_MAX_ROWS = _entry(
     "If > 0, truncate results via take(n) (KyuubiConf.scala:2422).")
 OPERATION_INCREMENTAL_COLLECT = _entry(
     "kyuubi.operation.incremental.collect", False, bool,
-    "Stream results via toLocalIterator instead of collect (KyuubiConf.scala:2465).")
+    "Stream results one partition at a time instead of collecting them (KyuubiConf.scala:2465).")
 OPERATION_RESULT_SAVE_TO_FILE = _entry(
     "kyuubi.operation.result.saveToFile.enabled", False, bool,
     "Spill large results to file and re-read incrementally (ExecuteStatement.scala:172-199).")

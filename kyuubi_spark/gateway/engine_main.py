@@ -46,6 +46,9 @@ IDLE_TIMEOUT_KEY = "kyuubi.session.engine.idle.timeout"
 MAX_LIFETIME_KEY = "kyuubi.session.engine.spark.max.lifetime"
 SHARE_LEVEL_KEY = "kyuubi.engine.share.level"
 SPARK_MASTER_KEY = "kyuubi.engine.spark.master"
+# how long an engine waits on a frontend peer it cannot see finish: past
+# max lifetime for a first contact, and at shutdown for open connections
+GRACE_S = 15.0
 
 
 def _parse_args(argv=None):
@@ -181,7 +184,10 @@ def main(argv=None) -> int:
             print(f"engine sessions: {n} conns: {conns}",
                   file=sys.stderr, flush=True)
             last_n = (n, conns)
-        if n > 0 or conns > 0:
+        # ...but once a CONNECTION-level engine's one session has closed, a
+        # peer that keeps its socket open is not activity: the drain below
+        # bounds how long it is waited for
+        if n > 0 or (conns > 0 and not (share_level == "CONNECTION" and seen_session)):
             if n > 0:
                 seen_session = True
             idle_since = None
@@ -195,7 +201,7 @@ def main(argv=None) -> int:
             # first sessionless check after expiry (reference semantics)
             and (
                 seen_session
-                or time.time() - start_time > max_lifetime + 15.0
+                or time.time() - start_time > max_lifetime + GRACE_S
             )
         ):
             print("engine stopping: max lifetime reached",
@@ -224,9 +230,11 @@ def main(argv=None) -> int:
         pass
     # stop() closes the LISTENER only; a connection admitted just before
     # it may still carry an in-flight open/statement in its own handler
-    # thread — drain it before tearing Spark down (parent death or
-    # SIGTERM sets `stop` and bounds the wait)
-    while not stop.is_set() and (
+    # thread — drain it before tearing Spark down, for at most the grace
+    # window: a client holding its socket open after CloseSession must not
+    # keep the engine alive (parent death or SIGTERM ends the wait sooner)
+    drain_deadline = time.time() + GRACE_S
+    while not stop.is_set() and time.time() < drain_deadline and (
         engine.sessions.count > 0
         or getattr(svc, "active_connections", 0) > 0
     ):

@@ -4,16 +4,24 @@ Mirrors the reference's FetchIterator trio
 (kyuubi-common/.../operation/FetchIterator.scala:23-128):
 
 - `ArrayFetchIterator` — fully materialized results; supports FETCH_NEXT,
-  FETCH_PRIOR and absolute repositioning.
-- `IterableFetchIterator` — incremental results (e.g. toLocalIterator);
+  FETCH_PRIOR and absolute repositioning. Statement results are held as
+  one Arrow table, so a page is a zero-copy table slice; small results
+  (metadata, plan text) are lists of Python rows, and the arrow result
+  format pages a list of RecordBatches.
+- `IterableFetchIterator` — incremental results over Python rows;
   forward-only. As in the reference (:121-128), absolute/prior fetches that
   would rewind are no-ops past the consumed prefix — documented limitation.
+- `BatchFetchIterator` — the same forward-only cursor over a stream of
+  Arrow RecordBatches (incremental collect and the spill re-read, which
+  stream one partition at a time); a page is an Arrow table.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
 from typing import Any
+
+import pyarrow as pa
 
 
 class FetchIterator:
@@ -37,12 +45,15 @@ class FetchIterator:
     def fetch_start(self) -> int:
         raise NotImplementedError
 
-    def take(self, n: int) -> list[Any]:
+    def take(self, n: int) -> Any:
         raise NotImplementedError
 
 
 class ArrayFetchIterator(FetchIterator):
-    def __init__(self, rows: list[Any]):
+    """``rows`` is anything with ``len()`` and slicing: a list of rows or
+    batches, or a pyarrow Table."""
+
+    def __init__(self, rows):
         self._rows = rows
         self._start = 0  # start of the current fetch window
         self._pos = 0  # next row to serve
@@ -59,7 +70,7 @@ class ArrayFetchIterator(FetchIterator):
         self._start = pos
         self._pos = pos
 
-    def take(self, n: int) -> list[Any]:
+    def take(self, n: int):
         self._start = self._pos
         out = self._rows[self._pos : self._pos + n]
         self._pos += len(out)
@@ -102,3 +113,39 @@ class IterableFetchIterator(FetchIterator):
                 self._exhausted = True
                 break
         return out
+
+
+class BatchFetchIterator(IterableFetchIterator):
+    """Forward-only cursor over RecordBatches of ``schema``; pages are
+    Arrow tables cut across batch boundaries."""
+
+    def __init__(self, batches: Iterable[pa.RecordBatch], schema: pa.Schema):
+        super().__init__(batches)
+        self._schema = schema
+        self._batch: pa.RecordBatch | None = None
+        self._offset = 0  # rows of self._batch already served
+
+    def _advance(self, n: int) -> list[pa.RecordBatch]:
+        """Step over the next n rows; returns them as batch slices."""
+        out = []
+        while n > 0 and not self._exhausted:
+            if self._batch is None or self._offset == self._batch.num_rows:
+                try:
+                    self._batch, self._offset = next(self._iter), 0
+                except StopIteration:
+                    self._exhausted, self._batch = True, None
+                continue
+            piece = self._batch.slice(self._offset, n)
+            self._offset += piece.num_rows
+            self._pos += piece.num_rows
+            n -= piece.num_rows
+            out.append(piece)
+        return out
+
+    def fetch_absolute(self, pos: int) -> None:
+        self._advance(pos - self._pos)
+        self._start = self._pos
+
+    def take(self, n: int) -> pa.Table:
+        self._start = self._pos
+        return pa.Table.from_batches(self._advance(n), self._schema)

@@ -30,6 +30,8 @@ import threading
 import uuid
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import types as T
 
 from kyuubi_spark.gateway.state import FetchOrientation, OperationState
@@ -56,7 +58,8 @@ class TType:
 
 
 # Value model for writing:
-#   STRUCT -> list[(fid, ftype, value)]   (None values skipped)
+#   STRUCT -> list[(fid, ftype, value)]   (None values skipped), or bytes
+#             already encoded (the TColumns of wire.to_column_based_set)
 #   LIST   -> (elem_ftype, [values])
 #   MAP    -> (key_ftype, val_ftype, dict)
 #   STRING -> str (utf-8) or bytes (binary)
@@ -90,6 +93,9 @@ class ProtocolWriter:
             b += struct.pack(">i", len(raw))
             b += raw
         elif ftype == TType.STRUCT:
+            if isinstance(v, bytes):
+                b += v
+                return
             for fid, ft, fv in v:
                 if fv is None:
                     continue
@@ -111,9 +117,19 @@ class ProtocolWriter:
             raise ValueError(f"unsupported thrift type {ftype}")
 
 
+# fixed-width list elements decode in one struct.unpack per list
+_LIST_FMT = {
+    TType.BOOL: ("?", 1), TType.BYTE: ("b", 1), TType.DOUBLE: ("d", 8),
+    TType.I16: ("h", 2), TType.I32: ("i", 4), TType.I64: ("q", 8),
+}
+_I32 = struct.Struct(">i")
+
+
 class ProtocolReader:
     """Generic reader: structs come back as {fid: (ftype, value)} with
-    unknown field types skipped — the thrift forward-compat contract."""
+    unknown field types skipped — the thrift forward-compat contract.
+    Lists of fixed-width values and of strings decode in bulk, not one
+    ``read_value`` per element: a FetchResults TColumn is one such list."""
 
     def __init__(self, rfile) -> None:
         self.f = rfile
@@ -125,6 +141,32 @@ class ProtocolReader:
             if not chunk:
                 raise EOFError("thrift peer closed")
             out += chunk
+        return out
+
+    def _read_strings(self, n: int) -> list[bytes]:
+        """n TBinaryProtocol strings. From a buffered stream, every string
+        already in its buffer is cut out of one ``peek`` and the lot is
+        consumed with one ``read``."""
+        peek, unpack, out = getattr(self.f, "peek", None), _I32.unpack_from, []
+        append = out.append
+        while len(out) < n:
+            buf = peek() if peek is not None else b""
+            pos, end = 0, len(buf)
+            for _ in range(n - len(out)):
+                if pos + 4 > end:
+                    break
+                start = pos + 4
+                stop = start + unpack(buf, pos)[0]
+                if stop < start:
+                    raise ValueError("negative thrift string length")
+                if stop > end:
+                    break
+                append(buf[start:stop])
+                pos = stop
+            if pos:
+                self._read(pos)
+            else:  # nothing buffered, or a string longer than the buffer
+                append(self._read(_I32.unpack(self._read(4))[0]))
         return out
 
     def message_begin(self) -> tuple[str, int, int]:
@@ -162,6 +204,11 @@ class ProtocolReader:
                 fields[fid] = (ft, self.read_value(ft))
         if ftype in (TType.LIST, TType.SET):
             et, n = struct.unpack(">bi", self._read(5))
+            if et in _LIST_FMT:
+                code, width = _LIST_FMT[et]
+                return (et, list(struct.unpack(f">{n}{code}", self._read(n * width))))
+            if et == TType.STRING:
+                return (et, self._read_strings(n))
             return (et, [self.read_value(et) for _ in range(n)])
         if ftype == TType.MAP:
             kt, vt, n = struct.unpack(">bbi", self._read(6))
@@ -182,16 +229,6 @@ _TYPE_ID = {
     "array": 10, "map": 11, "struct": 12, "decimal": 15, "null": 16,
     "date": 17, "varchar": 18, "char": 19,
     "interval_year_month": 20, "interval_day_time": 21,
-}
-
-# TColumn union slot per carried representation
-_COL_SLOT = {
-    "boolean": 1, "tinyint": 2, "smallint": 3, "int": 4, "bigint": 5,
-    "double": 6, "float": 6, "string": 7, "binary": 8,
-}
-_SLOT_VTYPE = {
-    1: TType.BOOL, 2: TType.BYTE, 3: TType.I16, 4: TType.I32,
-    5: TType.I64, 6: TType.DOUBLE, 7: TType.STRING, 8: TType.STRING,
 }
 
 _OP_STATE = {  # TOperationState ordinals
@@ -276,21 +313,12 @@ def _table_schema(
     return [(1, TType.LIST, (TType.STRUCT, cols))]
 
 
-def _row_set(rows: list, schema: T.StructType) -> list:
-    """V6+ columnar TRowSet from gateway wire shapes (one TColumn per
-    column: values vector + LE null bitmask)."""
-    from kyuubi_spark.gateway.wire import to_column_based_set
+def _row_set(page, schema: T.StructType) -> list:
+    """V6+ columnar TRowSet: the TColumns wire.to_column_based_set encodes
+    (values vector + LE null bitmask each), spliced in as bytes."""
+    from kyuubi_spark.gateway import wire
 
-    colset = to_column_based_set(rows, schema)
-    tcolumns = []
-    for f, col in zip(schema.fields, colset["columns"]):
-        slot = _COL_SLOT.get(_simple(f.dataType), 7)
-        vt = _SLOT_VTYPE[slot]
-        values = col["values"]
-        if slot == 7:
-            values = [v if isinstance(v, (str, bytes)) else str(v) for v in values]
-        inner = [(1, TType.LIST, (vt, values)), (2, TType.STRING, bytes(col["nulls"]))]
-        tcolumns.append([(slot, TType.STRUCT, inner)])
+    tcolumns = wire.to_column_based_set(page, schema)
     return [(1, TType.I64, 0), (3, TType.LIST, (TType.STRUCT, tcolumns))]
 
 
@@ -756,18 +784,19 @@ class ThriftFrontendService:
                 (2, TType.BOOL, len(lines) == int(max_rows)),
                 (3, TType.STRUCT, _row_set([(ln,) for ln in lines], log_schema)),
             ]
-        rows = op.get_next_row_set(orientation, int(max_rows))
+        # the columnar page accessor of a local operation; forwarded and
+        # JDBC-backed operations page Python rows
+        fetch_page = getattr(op, "fetch_page", op.get_next_row_set)
+        page = fetch_page(orientation, int(max_rows))
         schema = op.get_result_set_schema()
-        # Arrow result mode (ArrowBasedExecuteStatement): the fetched items
-        # are pyarrow RecordBatches — ship each as IPC-stream bytes in one
+        # Arrow result mode (ArrowBasedExecuteStatement): the page is a list
+        # of pyarrow RecordBatches — ship each as IPC-stream bytes in one
         # binary column, the layout Kyuubi's arrow-enabled JDBC client reads
-        if rows and type(rows[0]).__name__ == "RecordBatch":
+        if isinstance(page, list) and page and isinstance(page[0], pa.RecordBatch):
             import io
 
-            import pyarrow as pa
-
             payloads = []
-            for batch in rows:
+            for batch in page:
                 sink = io.BytesIO()
                 with pa.ipc.new_stream(sink, batch.schema) as wr:
                     wr.write_batch(batch)
@@ -775,13 +804,13 @@ class ThriftFrontendService:
             arrow_schema = T.StructType([T.StructField("arrowBatch", T.BinaryType())])
             return [
                 (1, TType.STRUCT, _status_ok()),
-                (2, TType.BOOL, len(rows) == int(max_rows)),
+                (2, TType.BOOL, len(page) == int(max_rows)),
                 (3, TType.STRUCT, _row_set(payloads, arrow_schema)),
             ]
         return [
             (1, TType.STRUCT, _status_ok()),
-            (2, TType.BOOL, len(rows) == int(max_rows)),
-            (3, TType.STRUCT, _row_set(rows, schema)),
+            (2, TType.BOOL, len(page) == int(max_rows)),
+            (3, TType.STRUCT, _row_set(page, schema)),
         ]
 
     def _do_CancelOperation(self, req: dict) -> list:
@@ -833,7 +862,7 @@ class ThriftClient:
             self.sock = ssl_context.wrap_socket(
                 self.sock, server_hostname=host
             )
-        self.rfile = self.sock.makefile("rb")
+        self.rfile = self.sock.makefile("rb", buffering=1 << 16)
         self._sasl = user is not None
         if self._sasl:
             from kyuubi_spark.gateway import auth as sasl
@@ -1020,19 +1049,16 @@ class ThriftClient:
         cols = []
         for tcol in columns:
             slot, (_, inner) = next(iter(tcol.items()))
-            values = inner[1][1][1]
-            nulls = bytes(inner[2][1])
-            decoded = []
-            for i, v in enumerate(values):
-                if i // 8 < len(nulls) and (nulls[i // 8] >> (i % 8)) & 1:
-                    decoded.append(None)
-                elif slot in (7, 8) and isinstance(v, bytes) and slot == 7:
-                    decoded.append(v.decode("utf-8"))
-                else:
-                    decoded.append(v)
-            cols.append(decoded)
-        n = max((len(c) for c in cols), default=0)
-        return [[c[i] for c in cols] for i in range(n)]
+            values = inner[1][1][1]  # decoded in bulk by the reader
+            if slot == 7:  # TStringColumn: UTF-8 text; 8 (binary) stays bytes
+                values = list(map(bytes.decode, values))
+            nulls = np.frombuffer(inner[2][1], np.uint8)
+            if nulls.any():
+                isnull = np.unpackbits(nulls, bitorder="little")[: len(values)]
+                for i in np.flatnonzero(isnull).tolist():
+                    values[i] = None
+            cols.append(values)
+        return [list(row) for row in zip(*cols)]
 
     def close_operation(self, op_guid: bytes) -> None:
         self._call("CloseOperation", [(1, TType.STRUCT, _op_handle(op_guid, True))])

@@ -8,19 +8,39 @@ Counterparts in the reference:
 - TRowSetGenerator.toRowBasedSet/toColumnBasedSet (kyuubi-common/.../engine/
   result/TRowSetGenerator.scala:25-59): protocol >= V6 ships columnar
   TColumns (one values vector + null bitmask per column), older protocols
-  ship row-based TRows. We reproduce both shapes as JSON-able dicts; the
-  columnar layout, default-fill of nulls, and bitmask semantics match, and
-  gateway.thrift frames the columnar shape as real TBinaryProtocol TColumns
-  for the socket frontend.
+  ship row-based TRows.
+
+There is one TColumn writer, ``to_column_based_set``. It encodes a page
+column by column straight from Arrow into TBinaryProtocol bytes, which
+gateway.thrift splices into the FetchResults reply:
+
+- fixed-width columns (boolean, tinyint .. bigint, float, double) become
+  big-endian numpy bytes, nulls filled with 0;
+- string and binary columns get a vectorised length-prefix interleave,
+  nulls as empty strings;
+- decimal and date columns render through an Arrow cast to string;
+- the types whose Arrow text differs from HiveResult's fall back to
+  ``to_hive_string`` per value, one column at a time: timestamps, day-time
+  intervals, nested types (arrays, maps, structs, and the binary values
+  nested in them, decoded as UTF-8) and decimal columns holding a value in
+  scientific notation (see ``_text``);
+- small pages of Python rows (metadata, log, plan-only, ``%json``,
+  forwarded results) become Arrow columns of the carried type first.
+
+The row-based shape stays a JSON-able dict of rendered cells.
 """
 
 from __future__ import annotations
 
 import math
+import struct
 from datetime import date, datetime, timedelta
 from decimal import Decimal
 from typing import Any, Sequence
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
 
 __all__ = [
@@ -94,7 +114,9 @@ def to_hive_string(value: Any, dt: T.DataType, nested: bool = False) -> str:
     if isinstance(dt, (T.FloatType, T.DoubleType)):
         return _fmt_float(float(value))
     if isinstance(dt, T.DecimalType):
-        return str(Decimal(value))
+        # in the engineering form a JVM BigDecimal reaches Python in (it is
+        # pickled as toEngineeringString): 1E-10 at scale 10 is "1.00E-10"
+        return str(Decimal(Decimal(value).to_eng_string()))
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
         return _fmt_ts(value)
     if isinstance(dt, T.DayTimeIntervalType):
@@ -108,43 +130,6 @@ def to_hive_string(value: Any, dt: T.DataType, nested: bool = False) -> str:
     return str(value)
 
 
-# thrift TColumn default-fills null slots and flags them in a bitmask
-_DEFAULTS: list[tuple[type, Any]] = [
-    (T.BooleanType, False),
-    (T.ByteType, 0), (T.ShortType, 0), (T.IntegerType, 0), (T.LongType, 0),
-    (T.FloatType, 0.0), (T.DoubleType, 0.0),
-    (T.BinaryType, b""),
-]
-
-
-def _default_for(dt: T.DataType) -> Any:
-    for typ, d in _DEFAULTS:
-        if isinstance(dt, typ):
-            return d
-    return ""  # everything else rides the string column
-
-
-def _is_string_carried(dt: T.DataType) -> bool:
-    """Complex/temporal/decimal values ride the STRING TColumn, pre-rendered
-    with toHiveString (ExecuteStatement.scala:245-247 stringifies complex
-    types before the wire; SchemaHelper maps them to STRING)."""
-    return not isinstance(
-        dt,
-        (
-            T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-            T.FloatType, T.DoubleType, T.StringType, T.BinaryType,
-        ),
-    )
-
-
-def _null_bitmask(nulls: Sequence[bool]) -> bytes:
-    out = bytearray((len(nulls) + 7) // 8)
-    for i, isnull in enumerate(nulls):
-        if isnull:
-            out[i // 8] |= 1 << (i % 8)
-    return bytes(out)
-
-
 def to_row_based_set(rows: Sequence[Sequence[Any]], schema: T.StructType) -> dict:
     """Pre-V6 row-oriented shape: one rendered cell list per row."""
     return {
@@ -156,29 +141,190 @@ def to_row_based_set(rows: Sequence[Sequence[Any]], schema: T.StructType) -> dic
     }
 
 
-def to_column_based_set(rows: Sequence[Sequence[Any]], schema: T.StructType) -> dict:
-    """V6+ columnar shape: per column one values vector (nulls default-
-    filled) + a little-endian null bitmask, exactly the TColumn layout."""
-    columns = []
-    for i, f in enumerate(schema.fields):
-        cells = [row[i] for row in rows]
-        nulls = [c is None for c in cells]
-        string_carried = _is_string_carried(f.dataType)
-        values = [
-            _default_for(f.dataType)
-            if c is None
-            else (to_hive_string(c, f.dataType) if string_carried else c)
-            for c in cells
-        ]
-        columns.append(
-            {
-                "name": f.name,
-                "type": f.dataType.simpleString(),
-                "values": values,
-                "nulls": _null_bitmask(nulls),
-            }
+# -- the TColumn writer ------------------------------------------------------
+
+# TBinaryProtocol type codes of the TColumn layout
+_T_BOOL, _T_BYTE, _T_DOUBLE, _T_I16, _T_I32, _T_I64 = 2, 3, 4, 6, 8, 10
+_T_STRING, _T_STRUCT, _T_LIST = 11, 12, 15
+
+# TColumn union slot of each Spark type (SchemaHelper's TTypeId → the
+# T*Column it rides); every other type rides TStringColumn, slot 7
+_SLOT = {
+    T.BooleanType: 1, T.ByteType: 2, T.ShortType: 3, T.IntegerType: 4,
+    T.LongType: 5, T.FloatType: 6, T.DoubleType: 6, T.BinaryType: 8,
+}
+# fixed-width slot → (element type, Arrow carrier, big-endian numpy dtype)
+_FIXED = {
+    1: (_T_BOOL, pa.bool_(), ">u1"),
+    2: (_T_BYTE, pa.int8(), ">i1"),
+    3: (_T_I16, pa.int16(), ">i2"),
+    4: (_T_I32, pa.int32(), ">i4"),
+    5: (_T_I64, pa.int64(), ">i8"),
+    6: (_T_DOUBLE, pa.float64(), ">f8"),
+}
+_PY_FIXED = {1: bool, 2: int, 3: int, 4: int, 5: int, 6: float}
+_BE_I32 = np.dtype(">i4")
+
+
+def _slot(dt: T.DataType) -> int:
+    return _SLOT.get(type(dt), 7)
+
+
+def _is_string_carried(dt: T.DataType) -> bool:
+    """Complex/temporal/decimal values ride the STRING TColumn, pre-rendered
+    with toHiveString (ExecuteStatement.scala:245-247 stringifies complex
+    types before the wire; SchemaHelper maps them to STRING)."""
+    return _slot(dt) == 7 and not isinstance(dt, T.StringType)
+
+
+def _python_column(values: list, dt: T.DataType) -> pa.Array:
+    """A small page of Python values (metadata, log, plan text, forwarded
+    rows) as an Arrow column of the type its TColumn carries."""
+    slot = _slot(dt)
+    if slot in _FIXED:
+        conv = _PY_FIXED[slot]
+        return pa.array(
+            [None if v is None else conv(v) for v in values], _FIXED[slot][1]
         )
-    return {"startRowOffset": 0, "columns": columns}
+    carried = _is_string_carried(dt)
+    out = []
+    for v in values:
+        if v is not None:
+            if carried:
+                v = to_hive_string(v, dt)
+            if not isinstance(v, (str, bytes)):
+                v = bytes(v) if slot == 8 else str(v)
+        out.append(v)
+    return pa.array(out, pa.binary())
+
+
+def _hive_strings(col: pa.Array, dt: T.DataType) -> pa.Array:
+    """The per-value fallback: the column's Python values, converted the way
+    PySpark builds Rows from Arrow, rendered with to_hive_string."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    conv = ArrowTableToRowsConversion._create_converter(dt, binary_as_bytes=False)
+    return pa.array(
+        [None if v is None else to_hive_string(conv(v), dt) for v in col.to_pylist()],
+        pa.string(),
+    )
+
+
+def _text(col: pa.Array, dt: T.DataType) -> pa.Array:
+    """The string TColumn's values as an Arrow string/binary column.
+
+    Strings (and the JVM-rendered intervals/variants of wire_safe_df) ride
+    as they are; decimals and dates render through an Arrow cast, which
+    matches to_hive_string except in scientific notation (Arrow writes
+    ``0.E-10`` and ``1.E-10`` where to_hive_string writes ``0E-10`` and
+    ``1.00E-10``), so a decimal column holding one falls back.  Types whose
+    Arrow text differs from HiveResult's fall back to to_hive_string per
+    value: timestamps (Arrow keeps trailing fraction zeros and appends
+    ``Z``), day-time intervals, nested types (quoted strings, sorted map
+    entries, ``null``) and binary nested in them (decoded as UTF-8)."""
+    t = col.type
+    if _offsets_dtype(t) is not None:
+        return col
+    if pa.types.is_null(t):
+        return pa.nulls(len(col), pa.string())
+    if pa.types.is_date32(t):
+        return pc.cast(col, pa.string())
+    if pa.types.is_decimal(t):
+        text = pc.cast(col, pa.string())
+        if not pc.any(pc.match_substring(text, "E")).as_py():
+            return text
+    return _hive_strings(col, dt)
+
+
+def _null_bitmask(col: pa.Array) -> bytes:
+    """LSB-first null bitmask, one bit per row (the inverse of Arrow's
+    validity bitmap)."""
+    n = len(col)
+    if not col.null_count:
+        return bytes((n + 7) // 8)
+    isnull = col.is_null().to_numpy(zero_copy_only=False)
+    return np.packbits(isnull, bitorder="little").tobytes()
+
+
+def _offsets_dtype(t: pa.DataType) -> np.dtype | None:
+    """The offsets width of a string or binary Arrow type, else None."""
+    if pa.types.is_string(t) or pa.types.is_binary(t):
+        return np.dtype(np.int32)
+    if pa.types.is_large_string(t) or pa.types.is_large_binary(t):
+        return np.dtype(np.int64)
+    return None
+
+
+def _length_prefixed(col: pa.Array) -> bytes:
+    """TBinaryProtocol strings back to back: a big-endian i32 length, then
+    the bytes, per value; nulls ride as empty strings."""
+    n = len(col)
+    if n == 0:
+        return b""
+    if col.null_count:
+        col = pc.fill_null(col, pa.scalar(b"", col.type))
+    _, offsets_buf, data_buf = col.buffers()
+    odt = _offsets_dtype(col.type)
+    offsets = np.frombuffer(
+        offsets_buf, odt, count=n + 1, offset=col.offset * odt.itemsize
+    ).astype(np.int64)
+    base, size = int(offsets[0]), int(offsets[-1] - offsets[0])
+    data = (
+        np.frombuffer(data_buf, np.uint8, count=size, offset=base)
+        if size else np.empty(0, np.uint8)
+    )
+    out = np.empty(4 * n + size, np.uint8)
+    starts = offsets[:-1] - base + 4 * np.arange(n)
+    prefix = (starts[:, None] + np.arange(4)).ravel()
+    out[prefix] = np.diff(offsets).astype(_BE_I32).view(np.uint8)
+    is_data = np.ones(len(out), bool)
+    is_data[prefix] = False
+    out[is_data] = data
+    return out.tobytes()
+
+
+def _tcolumn(col: pa.Array, dt: T.DataType) -> bytes:
+    """One TColumn, TBinaryProtocol-encoded: the union field ``slot``
+    holding T*Column{1: values list (nulls default-filled), 2: nulls}."""
+    slot = _slot(dt)
+    n = len(col)
+    nulls = _null_bitmask(col)
+    if slot in _FIXED:
+        et, carrier, be = _FIXED[slot]
+        if col.null_count:
+            col = pc.fill_null(col, pa.scalar(False if slot == 1 else 0, col.type))
+        values = col.to_numpy(zero_copy_only=False).astype(be).tobytes()
+    else:
+        et = _T_STRING
+        values = _length_prefixed(_text(col, dt) if slot == 7 else col)
+    return b"".join((
+        struct.pack(">bhbhbi", _T_STRUCT, slot, _T_LIST, 1, et, n),
+        values,
+        struct.pack(">bhi", _T_STRING, 2, len(nulls)),
+        nulls,
+        b"\x00\x00",  # STOP of T*Column, STOP of the TColumn union
+    ))
+
+
+def to_column_based_set(page, schema: T.StructType) -> list[bytes]:
+    """V6+ columnar shape (TRowSetGenerator.toColumnBasedSet): one
+    TBinaryProtocol-encoded TColumn per schema column, in order.
+
+    ``page`` is an Arrow table or record batch (statement results, held as
+    Arrow) or a sequence of Python rows (metadata, log, plan-only and
+    forwarded pages), which become Arrow columns of the carried type
+    first; ``len(page)`` is its row count."""
+    if isinstance(page, (pa.Table, pa.RecordBatch)):
+        cols = [
+            c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c
+            for c in page.columns
+        ]
+    else:
+        cols = [
+            _python_column([row[i] for row in page], f.dataType)
+            for i, f in enumerate(schema.fields)
+        ]
+    return [_tcolumn(c, f.dataType) for c, f in zip(cols, schema.fields)]
 
 
 def wire_safe_df(df):

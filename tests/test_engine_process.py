@@ -143,6 +143,38 @@ def test_connection_level_engine_dies_with_session(launching_gateway):
     assert disco.get_server_host(ns) is None
 
 
+def test_connection_level_engine_exits_despite_lingering_socket(launching_gateway):
+    """A client that keeps its socket open after CloseSession cannot keep a
+    CONNECTION-level engine alive: the shutdown drain waits for it at most
+    the grace window, then the engine stops."""
+    import socket
+
+    from kyuubi_spark.gateway.engine_main import GRACE_S
+    from kyuubi_spark.gateway.tls import client_ssl_context
+
+    gw, disco, cert = launching_gateway
+    s = _open(
+        gw, "carol", cert, extra={"kyuubi.engine.share.level": "CONNECTION"}
+    )
+    ns = s.namespace
+    child = gw.process_manager._engines[ns]
+    host, port = disco.get_server_host(ns)
+    # a TLS peer that never speaks: the engine counts it as a connection
+    lingering = client_ssl_context(cafile=cert).wrap_socket(
+        socket.create_connection((host, port)), server_hostname=host
+    )
+    try:
+        deadline = time.time() + 10
+        while "engine sessions: 1 conns: 2" not in child.stderr_tail(60):
+            assert time.time() < deadline, child.stderr_tail(60)
+            time.sleep(0.2)  # until the engine counts the silent peer
+        gw.close_session(s.handle)
+        assert child.proc.wait(timeout=GRACE_S + 30) == 0
+        assert "engine stopped" in child.stderr_tail(60)
+    finally:
+        lingering.close()
+
+
 def test_unauthenticated_connection_is_rejected(launching_gateway):
     """The launched engine runs ONLY the engine-secure provider: a client
     without a valid internal token cannot open a session."""

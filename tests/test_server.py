@@ -5,6 +5,7 @@ Mirrors the reference's SessionLimiterSuite, FileSessionConfAdvisorSuite,
 metadata store suites, and KyuubiOperationPerConnectionSuite DSL tests.
 """
 
+import io
 import os
 import sys
 
@@ -292,13 +293,19 @@ def test_column_based_set_layout(spark):
         T.StructField("s", T.StringType()),
         T.StructField("a", T.ArrayType(T.IntegerType())),
     ])
+    from kyuubi_spark.gateway.thrift import ProtocolReader, TType
+
+    def decode(tcolumn: bytes):
+        """-> (union slot, values list, null bitmask) of one TColumn."""
+        fields = ProtocolReader(io.BytesIO(tcolumn)).read_value(TType.STRUCT)
+        slot, (_, inner) = next(iter(fields.items()))
+        return slot, inner[1][1][1], inner[2][1]
+
     rows = [(1, "x", [1, 2]), (None, None, None), (3, "z", [])]
-    cs = to_column_based_set(rows, schema)
-    ci, cstr, ca = cs["columns"]
-    assert ci["values"] == [1, 0, 3]          # null default-filled with 0
-    assert ci["nulls"] == b"\x02"             # row 1 → bit 1
-    assert cstr["values"] == ["x", "", "z"]
-    assert ca["values"] == ["[1,2]", "", "[]"]  # complex rides string column
+    ci, cstr, ca = map(decode, to_column_based_set(rows, schema))
+    assert ci == (5, [1, 0, 3], b"\x02")  # i64 slot; null → 0, row 1 → bit 1
+    assert cstr == (7, [b"x", b"", b"z"], b"\x02")
+    assert ca == (7, [b"[1,2]", b"", b"[]"], b"\x02")  # complex rides strings
     rb = to_row_based_set(rows, schema)
     assert rb["rows"][1] == ["NULL", "NULL", "NULL"]
     assert rb["rows"][0] == ["1", "x", "[1,2]"]
