@@ -78,8 +78,9 @@ def _spark_type(value: Any, hint: str) -> T.DataType:
 class JdbcBackedOperation:
     """Gateway-operation adapter over a ``jdbc_engine.JdbcOperation``."""
 
-    def __init__(self, inner: JdbcOperation):
+    def __init__(self, inner: JdbcOperation, session: "JdbcBackedSession"):
         self.inner = inner
+        self.session = session
         self.handle = inner.handle
         self._struct: T.StructType | None = None
         self._first: list[Any] | None = None
@@ -175,7 +176,7 @@ class JdbcBackedSession:
 
     def _wrap(self, inner: JdbcOperation) -> JdbcBackedOperation:
         self.last_access = time.time()
-        op = JdbcBackedOperation(inner)
+        op = JdbcBackedOperation(inner, self)
         self.operations[op.handle.id] = op
         return op
 

@@ -40,6 +40,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from kyuubi_spark import catalog as CAT
 from kyuubi_spark.gateway import conf as C
 from kyuubi_spark.gateway import schema as SH
 from kyuubi_spark.gateway.fetch import (
@@ -118,6 +119,8 @@ class Operation:
         # the schema of Arrow result pages, when it differs from _schema
         # (ExecuteStatement renders some types to strings before the wire)
         self._page_schema: T.StructType | None = None
+        # the session time zone TIMESTAMP results render in on the wire
+        self.time_zone: str | None = None
         self._async = should_run_async
         self._thread: threading.Thread | None = None
         self.start_time = time.time()
@@ -425,6 +428,8 @@ class ExecuteStatement(Operation):
             df = WD.forced_limit(df, conf.get(C.WATCHDOG_FORCED_MAX_ROWS))
             self.result_df = df
             self._schema = df.schema
+            # HiveResult renders TIMESTAMP values in the session time zone
+            self.time_zone = spark.conf.get("spark.sql.session.timeZone")
             with self._lock:
                 if self.state is OperationState.RUNNING:
                     # analysis finished — observable COMPILED phase
@@ -723,16 +728,13 @@ class GetCatalogs(MetadataOperation):
     def _execute(self) -> None:
         spark = self.session.spark
         # Loaded plugins + the session catalog...
-        names = {c.name for c in spark.catalog.listCatalogs()}
-        names.add("spark_catalog")
+        names = set(CAT.list_catalogs(spark))
+        names.add(CAT.SESSION_CATALOG)
         # ...plus registered-but-not-yet-loaded DSv2 plugins, found by
         # scanning `spark.sql.catalog.<name>` conf keys — the
         # SparkCatalogUtils.getCatalogs:63-90 enumeration.
         prefix = "spark.sql.catalog."
-        jconf = spark._jsparkSession.sessionState().conf().getAllConfs()
-        it = jconf.iterator()
-        while it.hasNext():
-            key = it.next()._1()
+        for key in CAT.conf_keys(spark):
             if key.startswith(prefix) and "." not in key[len(prefix):]:
                 names.add(key[len(prefix):])
         self._finish([("TABLE_CAT", _S)], sorted((n,) for n in names))
@@ -747,10 +749,9 @@ class GetSchemas(MetadataOperation):
     def _execute(self) -> None:
         spark = self.session.spark
         rx = _like_to_regex(self.pattern)
-        cur = spark.catalog.currentCatalog()
-        cat = self.catalog or cur
-        if cat == cur:
-            names = [db.name for db in spark.catalog.listDatabases()]
+        cat = self.catalog or spark.catalog.currentCatalog()
+        if cat == CAT.SESSION_CATALOG:
+            names = CAT.list_databases(spark)
         else:  # cross-catalog: resolve through the DSv2 catalog plugin
             names = _catalog_namespaces(spark, cat)
         rows = [(n, cat) for n in names if rx.match(n)]
@@ -784,12 +785,11 @@ class GetTables(MetadataOperation):
 
     def _execute(self) -> None:
         spark = self.session.spark
-        cur = spark.catalog.currentCatalog()
-        cat = self.catalog or cur
+        cat = self.catalog or spark.catalog.currentCatalog()
         srx = _like_to_regex(self.schema_pattern)
         trx = _like_to_regex(self.table_pattern)
         rows = []
-        if cat != cur:
+        if cat != CAT.SESSION_CATALOG:
             # Cross-catalog listing via the DSv2 plugin (no session switch);
             # DSv2 catalogs expose tables only (views are session-level).
             if self.table_types and "TABLE" not in self.table_types:
@@ -805,16 +805,10 @@ class GetTables(MetadataOperation):
                         rows.append((cat, ns, t.tableName, "TABLE", ""))
             self._finish(self._TABLE_FIELDS, sorted(rows))
             return
-        for db in spark.catalog.listDatabases():
-            if not srx.match(db.name):
-                continue
-            for t in spark.catalog.listTables(db.name):
-                ttype = "VIEW" if t.tableType in ("TEMPORARY", "VIEW") else "TABLE"
-                if not trx.match(t.name):
-                    continue
-                if self.table_types and ttype not in self.table_types:
-                    continue
-                rows.append((cat, t.namespace[0] if t.namespace else db.name, t.name, ttype, t.description or ""))
+        for t in CAT.list_tables(spark, srx.match, trx.match, describe=True):
+            ttype = "VIEW" if t.view else "TABLE"
+            if not self.table_types or ttype in self.table_types:
+                rows.append((cat, t.database, t.name, ttype, t.comment))
         self._finish(self._TABLE_FIELDS, sorted(rows))
 
 
@@ -842,13 +836,12 @@ class GetColumns(MetadataOperation):
 
     def _execute(self) -> None:
         spark = self.session.spark
-        cur = spark.catalog.currentCatalog()
-        cat = self.catalog or cur
+        cat = self.catalog or spark.catalog.currentCatalog()
         srx = _like_to_regex(self.schema_pattern)
         trx = _like_to_regex(self.table_pattern)
         crx = _like_to_regex(self.column_pattern)
         # (schema name, table name, fully-qualified reference) triples
-        if cat != cur:
+        if cat != CAT.SESSION_CATALOG:
             targets = [
                 (ns, t.tableName, f"`{cat}`.{_quote_ns(ns)}.`{t.tableName}`")
                 for ns in _catalog_namespaces(spark, cat)
@@ -859,14 +852,11 @@ class GetColumns(MetadataOperation):
         else:
             targets = [
                 (
-                    db.name,
+                    t.database,
                     t.name,
-                    f"`{db.name}`.`{t.name}`" if not t.isTemporary else f"`{t.name}`",
+                    f"`{t.database}`.`{t.name}`" if not t.temporary else f"`{t.name}`",
                 )
-                for db in spark.catalog.listDatabases()
-                if srx.match(db.name)
-                for t in spark.catalog.listTables(db.name)
-                if trx.match(t.name)
+                for t in CAT.list_tables(spark, srx.match, trx.match)
             ]
         rows = []
         for db_name, t_name, ref in targets:
@@ -917,9 +907,8 @@ class GetFunctions(MetadataOperation):
     def _execute(self) -> None:
         rx = _like_to_regex(self.pattern)
         rows = [
-            (None, f.namespace[0] if f.namespace else None, f.name, f.description or "", 0, f.className or "")
-            for f in self.session.spark.catalog.listFunctions()
-            if rx.match(f.name)
+            (None, f.database, f.name, f.usage or "", 0, f.class_name or "")
+            for f in CAT.list_functions(self.session.spark, rx.match)
         ]
         self._finish(
             [

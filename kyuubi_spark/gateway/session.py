@@ -222,10 +222,11 @@ class Session:
         self.get_operation(handle).cancel()
 
     def close_operation(self, handle: OperationHandle | str) -> None:
-        op = self.get_operation(handle)
-        op.close()
+        hid = handle.id if isinstance(handle, OperationHandle) else handle
         with self._lock:
-            self.operations.pop(op.handle.id, None)
+            op = self.operations.pop(hid, None)
+        if op is not None:
+            op.close()
 
     def close(self) -> None:
         with self._lock:

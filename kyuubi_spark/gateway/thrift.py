@@ -313,12 +313,12 @@ def _table_schema(
     return [(1, TType.LIST, (TType.STRUCT, cols))]
 
 
-def _row_set(page, schema: T.StructType) -> list:
+def _row_set(page, schema: T.StructType, time_zone: str | None = None) -> list:
     """V6+ columnar TRowSet: the TColumns wire.to_column_based_set encodes
     (values vector + LE null bitmask each), spliced in as bytes."""
     from kyuubi_spark.gateway import wire
 
-    tcolumns = wire.to_column_based_set(page, schema)
+    tcolumns = wire.to_column_based_set(page, schema, time_zone)
     return [(1, TType.I64, 0), (3, TType.LIST, (TType.STRUCT, tcolumns))]
 
 
@@ -810,7 +810,7 @@ class ThriftFrontendService:
         return [
             (1, TType.STRUCT, _status_ok()),
             (2, TType.BOOL, len(page) == int(max_rows)),
-            (3, TType.STRUCT, _row_set(page, schema)),
+            (3, TType.STRUCT, _row_set(page, schema, getattr(op, "time_zone", None))),
         ]
 
     def _do_CancelOperation(self, req: dict) -> list:
@@ -822,7 +822,13 @@ class ThriftFrontendService:
         with self._lock:
             op = self._operations.pop(guid, None)
         if op is not None:
-            op.close()
+            # through its session, which otherwise holds the closed
+            # operation until CloseSession
+            close = getattr(getattr(op, "session", None), "close_operation", None)
+            if close is None:
+                op.close()
+            else:
+                close(op.handle)
         return [(1, TType.STRUCT, _status_ok())]
 
     # -- handle resolution ------------------------------------------------

@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import math
 import struct
-from datetime import date, datetime, timedelta
+from datetime import date, datetime, timedelta, tzinfo
 from decimal import Decimal
 from typing import Any, Sequence
 
@@ -77,36 +77,42 @@ def _fmt_float(v: float) -> str:
     return repr(v)
 
 
-def _fmt_ts(v: datetime) -> str:
+def _fmt_ts(v: datetime, tz: tzinfo | None) -> str:
     # session-tz wall clock, trailing zero micros trimmed (HiveResult)
+    if tz is not None and v.tzinfo is not None:
+        v = v.astimezone(tz)
     s = v.strftime("%Y-%m-%d %H:%M:%S")
     if v.microsecond:
         s += (".%06d" % v.microsecond).rstrip("0")
     return s
 
 
-def to_hive_string(value: Any, dt: T.DataType, nested: bool = False) -> str:
+def to_hive_string(
+    value: Any, dt: T.DataType, nested: bool = False, tz: tzinfo | None = None
+) -> str:
     """Render one value the way HiveResult.toHiveString does (the wire
     format JDBC clients see for nested types, SchemaHelper maps
-    ARRAY/MAP/STRUCT to STRING columns carrying these)."""
+    ARRAY/MAP/STRUCT to STRING columns carrying these).  A zone-aware
+    timestamp renders as its wall clock in ``tz``, the session time zone,
+    when given."""
     if value is None:
         return "null" if nested else "NULL"
     if isinstance(dt, T.ArrayType):
         return "[" + ",".join(
-            to_hive_string(v, dt.elementType, True) for v in value
+            to_hive_string(v, dt.elementType, True, tz) for v in value
         ) + "]"
     if isinstance(dt, T.MapType):
         entries = sorted(
-            to_hive_string(k, dt.keyType, True)
+            to_hive_string(k, dt.keyType, True, tz)
             + ":"
-            + to_hive_string(v, dt.valueType, True)
+            + to_hive_string(v, dt.valueType, True, tz)
             for k, v in value.items()
         )
         return "{" + ",".join(entries) + "}"
     if isinstance(dt, T.StructType):
         vals = list(value)
         return "{" + ",".join(
-            f'"{f.name}":{to_hive_string(v, f.dataType, True)}'
+            f'"{f.name}":{to_hive_string(v, f.dataType, True, tz)}'
             for f, v in zip(dt.fields, vals)
         ) + "}"
     if isinstance(dt, T.BooleanType):
@@ -118,7 +124,7 @@ def to_hive_string(value: Any, dt: T.DataType, nested: bool = False) -> str:
         # pickled as toEngineeringString): 1E-10 at scale 10 is "1.00E-10"
         return str(Decimal(Decimal(value).to_eng_string()))
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return _fmt_ts(value)
+        return _fmt_ts(value, tz)
     if isinstance(dt, T.DayTimeIntervalType):
         return _fmt_daytime_interval(value)
     if isinstance(dt, T.DateType):
@@ -198,19 +204,41 @@ def _python_column(values: list, dt: T.DataType) -> pa.Array:
     return pa.array(out, pa.binary())
 
 
-def _hive_strings(col: pa.Array, dt: T.DataType) -> pa.Array:
+def _zone_kept(dt: T.DataType) -> T.DataType:
+    """``dt`` with every TIMESTAMP read as TIMESTAMP_NTZ: PySpark's Arrow
+    converter then passes on the zone-aware datetimes Arrow yields, where
+    it would move them to the gateway process's local zone."""
+    if isinstance(dt, T.TimestampType):
+        return T.TimestampNTZType()
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_zone_kept(dt.elementType), dt.containsNull)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _zone_kept(dt.keyType), _zone_kept(dt.valueType), dt.valueContainsNull
+        )
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _zone_kept(f.dataType), f.nullable) for f in dt.fields]
+        )
+    return dt
+
+
+def _hive_strings(col: pa.Array, dt: T.DataType, tz: tzinfo | None) -> pa.Array:
     """The per-value fallback: the column's Python values, converted the way
-    PySpark builds Rows from Arrow, rendered with to_hive_string."""
+    PySpark builds Rows from Arrow but with timestamps kept zone-aware,
+    rendered with to_hive_string."""
     from pyspark.sql.conversion import ArrowTableToRowsConversion
 
-    conv = ArrowTableToRowsConversion._create_converter(dt, binary_as_bytes=False)
+    conv = ArrowTableToRowsConversion._create_converter(
+        _zone_kept(dt), binary_as_bytes=False
+    )
     return pa.array(
-        [None if v is None else to_hive_string(conv(v), dt) for v in col.to_pylist()],
+        [None if v is None else to_hive_string(conv(v), dt, tz=tz) for v in col.to_pylist()],
         pa.string(),
     )
 
 
-def _text(col: pa.Array, dt: T.DataType) -> pa.Array:
+def _text(col: pa.Array, dt: T.DataType, tz: tzinfo | None) -> pa.Array:
     """The string TColumn's values as an Arrow string/binary column.
 
     Strings (and the JVM-rendered intervals/variants of wire_safe_df) ride
@@ -233,7 +261,7 @@ def _text(col: pa.Array, dt: T.DataType) -> pa.Array:
         text = pc.cast(col, pa.string())
         if not pc.any(pc.match_substring(text, "E")).as_py():
             return text
-    return _hive_strings(col, dt)
+    return _hive_strings(col, dt, tz)
 
 
 def _null_bitmask(col: pa.Array) -> bytes:
@@ -283,7 +311,7 @@ def _length_prefixed(col: pa.Array) -> bytes:
     return out.tobytes()
 
 
-def _tcolumn(col: pa.Array, dt: T.DataType) -> bytes:
+def _tcolumn(col: pa.Array, dt: T.DataType, tz: tzinfo | None) -> bytes:
     """One TColumn, TBinaryProtocol-encoded: the union field ``slot``
     holding T*Column{1: values list (nulls default-filled), 2: nulls}."""
     slot = _slot(dt)
@@ -296,7 +324,7 @@ def _tcolumn(col: pa.Array, dt: T.DataType) -> bytes:
         values = col.to_numpy(zero_copy_only=False).astype(be).tobytes()
     else:
         et = _T_STRING
-        values = _length_prefixed(_text(col, dt) if slot == 7 else col)
+        values = _length_prefixed(_text(col, dt, tz) if slot == 7 else col)
     return b"".join((
         struct.pack(">bhbhbi", _T_STRUCT, slot, _T_LIST, 1, et, n),
         values,
@@ -306,14 +334,28 @@ def _tcolumn(col: pa.Array, dt: T.DataType) -> bytes:
     ))
 
 
-def to_column_based_set(page, schema: T.StructType) -> list[bytes]:
+def _zone(name: str) -> tzinfo | None:
+    """The tzinfo of a session time zone ID; None for an ID Arrow cannot
+    read, such as ``GMT+8``."""
+    try:
+        return pa.lib.string_to_tzinfo(name)
+    except (KeyError, ValueError):
+        return None
+
+
+def to_column_based_set(
+    page, schema: T.StructType, time_zone: str | None = None
+) -> list[bytes]:
     """V6+ columnar shape (TRowSetGenerator.toColumnBasedSet): one
     TBinaryProtocol-encoded TColumn per schema column, in order.
 
     ``page`` is an Arrow table or record batch (statement results, held as
     Arrow) or a sequence of Python rows (metadata, log, plan-only and
     forwarded pages), which become Arrow columns of the carried type
-    first; ``len(page)`` is its row count."""
+    first; ``len(page)`` is its row count.  Arrow TIMESTAMP values render
+    in ``time_zone``, the session's ``spark.sql.session.timeZone``, as
+    HiveResult does; without it, in the zone their Arrow type carries."""
+    tz = _zone(time_zone) if time_zone else None
     if isinstance(page, (pa.Table, pa.RecordBatch)):
         cols = [
             c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c
@@ -324,7 +366,7 @@ def to_column_based_set(page, schema: T.StructType) -> list[bytes]:
             _python_column([row[i] for row in page], f.dataType)
             for i, f in enumerate(schema.fields)
         ]
-    return [_tcolumn(c, f.dataType) for c, f in zip(cols, schema.fields)]
+    return [_tcolumn(c, f.dataType, tz) for c, f in zip(cols, schema.fields)]
 
 
 def wire_safe_df(df):

@@ -22,16 +22,12 @@ import json
 
 from pyspark.sql import SparkSession
 
-
-def _jseq(jseq):
-    """Iterate a Scala Seq via py4j."""
-    for i in range(jseq.size()):
-        yield jseq.apply(i)
+from kyuubi_spark.catalog import jseq, list_tables
 
 
 def _walk(jnode):
     yield jnode
-    for child in _jseq(jnode.children()):
+    for child in jseq(jnode.children()):
         yield from _walk(child)
 
 
@@ -50,7 +46,7 @@ def _relation_name(jnode) -> str | None:
         if cls == "View":
             return jnode.desc().identifier().unquotedString()
         if cls == "UnresolvedRelation":
-            return ".".join(_jseq(jnode.multipartIdentifier()))
+            return ".".join(jseq(jnode.multipartIdentifier()))
         if cls == "SubqueryAlias":
             # temp views resolve to SubqueryAlias(name, underlying-plan)
             ident = jnode.identifier()
@@ -87,13 +83,13 @@ def _expr_refs(mapping: dict[int, set[str]], jexpr) -> set[str]:
 def _column_sources(jnode, mapping: dict[int, set[str]]) -> None:
     """Bottom-up exprId -> {source columns} (SparkSQLLineageParseHelper's
     transitive resolution). Mutates ``mapping``."""
-    for child in _jseq(jnode.children()):
+    for child in jseq(jnode.children()):
         _column_sources(child, mapping)
     cls = jnode.getClass().getSimpleName()
     try:
         if cls in _LEAF_RELATIONS:
             tbl = _relation_name(jnode)
-            for attr in _jseq(jnode.output()):
+            for attr in jseq(jnode.output()):
                 src = f"{tbl}.{attr.name()}" if tbl else attr.name()
                 mapping[attr.exprId().id()] = {src}
             return
@@ -106,13 +102,13 @@ def _column_sources(jnode, mapping: dict[int, set[str]]) -> None:
             named = jnode.windowExpressions()
         elif cls == "Generate":
             gen_refs = _expr_refs(mapping, jnode.generator())
-            for attr in _jseq(jnode.generatorOutput()):
+            for attr in jseq(jnode.generatorOutput()):
                 mapping[attr.exprId().id()] = set(gen_refs)
             return
         elif cls == "Union":
-            outs = list(_jseq(jnode.output()))
-            for child in _jseq(jnode.children()):
-                couts = list(_jseq(child.output()))
+            outs = list(jseq(jnode.output()))
+            for child in jseq(jnode.children()):
+                couts = list(jseq(child.output()))
                 for o, c in zip(outs, couts):
                     oid = o.exprId().id()
                     mapping.setdefault(oid, set()).update(
@@ -125,7 +121,7 @@ def _column_sources(jnode, mapping: dict[int, set[str]]) -> None:
             # still-unqualified sources with it (already-qualified entries
             # from real catalog tables pass through untouched)
             alias = jnode.identifier().name()
-            for attr in _jseq(jnode.output()):
+            for attr in jseq(jnode.output()):
                 aid = attr.exprId().id()
                 vals = mapping.get(aid)
                 if vals:
@@ -134,7 +130,7 @@ def _column_sources(jnode, mapping: dict[int, set[str]]) -> None:
                     }
             return
         if named is not None:
-            for e in _jseq(named):
+            for e in jseq(named):
                 try:
                     eid = e.exprId().id()
                 except Exception:
@@ -152,6 +148,7 @@ def extract_lineage(spark: SparkSession, statement: str) -> dict:
 
     inputs: list[str] = []
     seen = set()
+    tables = None  # the current database's tables and the temp views
     for node in _walk(analyzed):
         name = _relation_name(node)
         if name and name not in seen:
@@ -159,8 +156,13 @@ def extract_lineage(spark: SparkSession, statement: str) -> dict:
             # user subquery aliases over computed relations
             cls = node.getClass().getSimpleName()
             if cls == "SubqueryAlias":
-                tv = {t.name for t in spark.catalog.listTables()}
-                if name not in tv:
+                if tables is None:
+                    db = spark.catalog.currentDatabase()
+                    tables = {
+                        t.name
+                        for t in list_tables(spark, db.__eq__, lambda _: True)
+                    }
+                if name not in tables:
                     continue
             seen.add(name)
             inputs.append(name)
@@ -171,7 +173,7 @@ def extract_lineage(spark: SparkSession, statement: str) -> dict:
     column_lineage: dict[str, list[str]] = {}
     try:
         _column_sources(analyzed, mapping)
-        for attr in _jseq(analyzed.output()):
+        for attr in jseq(analyzed.output()):
             column_lineage[attr.name()] = sorted(
                 mapping.get(attr.exprId().id(), set())
             )

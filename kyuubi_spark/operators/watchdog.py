@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from kyuubi_spark.catalog import jseq
+
 
 class MaxScanExceeded(RuntimeError):
     pass
@@ -19,11 +21,6 @@ class MaxScanExceeded(RuntimeError):
 
 class UnsupportedOperation(RuntimeError):
     pass
-
-
-def _jseq(jseq):
-    for i in range(jseq.size()):
-        yield jseq.apply(i)
 
 
 def scan_bytes(df: DataFrame) -> int:
@@ -51,9 +48,8 @@ def scan_bytes(df: DataFrame) -> int:
                 return
             except Exception:
                 pass
-        children = node.children()
-        for i in range(children.size()):
-            walk(children.apply(i))
+        for child in jseq(node.children()):
+            walk(child)
 
     try:
         walk(jqe.sparkPlan())
@@ -62,7 +58,7 @@ def scan_bytes(df: DataFrame) -> int:
         total = 0
     if not seen_file_scan and total == 0:
         # non-file relations (in-memory, JDBC, views over local data)
-        for leaf in _jseq(jqe.optimizedPlan().collectLeaves()):
+        for leaf in jseq(jqe.optimizedPlan().collectLeaves()):
             try:
                 # sizeInBytes is a scala BigInt; stringify for exact conversion
                 total += int(str(leaf.stats().sizeInBytes()))

@@ -303,3 +303,60 @@ def test_beeline_cli_one_shot(thrift_server, capsys):
         "-e", "SELECT * FROM no_such_table",
     ])
     assert rc == 1
+
+
+def test_close_operation_drops_it_from_the_session(thrift_server, client):
+    import uuid
+
+    session = thrift_server._sessions[client.session_guid]
+    ids = []
+    for i in range(5):
+        op = client.execute(f"SELECT {i} AS i")
+        assert client.fetch(op) == [[i]]
+        client.close_operation(op)
+        ids.append(str(uuid.UUID(bytes=op)))
+    op = client.metadata_op("GetTableTypes")
+    client.fetch(op)
+    client.close_operation(op)
+    assert session.operations == {}
+    for oid in ids:
+        rec = thrift_server.engine.op_store.get(oid)
+        assert rec["state"] == "CLOSED" and rec["rowsFetched"] == 1
+    client.close_operation(op)  # closing twice is not an error
+
+
+@pytest.mark.parametrize("incremental", ["false", "true"])
+@pytest.mark.parametrize(
+    "process_tz, session_tz, literal, want",
+    [
+        # the literal is read in the session zone and rendered in it
+        ("America/Los_Angeles", "UTC", "2018-11-17 13:33:33", "2018-11-17 13:33:33"),
+        # 13:33:33 UTC is 05:33:33 on the session's Pacific wall clock
+        ("UTC", "America/Los_Angeles", "2018-11-17 13:33:33 UTC", "2018-11-17 05:33:33"),
+    ],
+)
+def test_timestamps_render_in_the_session_time_zone(
+    thrift_server, monkeypatch, incremental, process_tz, session_tz, literal, want
+):
+    import time
+
+    monkeypatch.setenv("TZ", process_tz)
+    time.tzset()
+    c = ThriftClient(thrift_server.host, thrift_server.port)
+    try:
+        c.open_session(user="tz_tester", conf={
+            "spark.sql.session.timeZone": session_tz,
+            "kyuubi.operation.incremental.collect": incremental,
+        })
+        op = c.execute(
+            "SELECT ts, array(ts) AS a, named_struct('t', ts) AS s, "
+            "map(ts, ts) AS m FROM (SELECT TIMESTAMP '" + literal + "' AS ts)"
+        )
+        assert c.fetch(op) == [
+            [want, f"[{want}]", f'{{"t":{want}}}', f"{{{want}:{want}}}"]
+        ]
+        c.close_session()
+    finally:
+        c.close()
+        monkeypatch.undo()
+        time.tzset()
